@@ -505,13 +505,10 @@ object Bench {
     def statePoint(keys: Int, batches: Int): String = {
       val ckpt = new java.io.File(sys.props("java.io.tmpdir"),
         s"graft-bench-state-${java.util.UUID.randomUUID()}").getAbsolutePath
-      val providerKey = "spark.sql.streaming.stateStore.providerClass"
-      val prevProvider = spark.conf.getOption(providerKey)
-      spark.conf.set(providerKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       spark.conf.set("spark.sql.streaming.numRecentProgressUpdates",
         math.max(100, batches + 16).toString)
-      try {
+      try GraftSession.withConf(spark, "spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
         val t0 = System.nanoTime()
         val q = spark.readStream
           .format("rate-micro-batch")
@@ -551,10 +548,6 @@ object Bench {
         val ms = progress.map(_.batchDuration.toString).mkString("[", ",", "]")
         s"""{"keys":$keys,"batches":${progress.length},"rows":$rows,"sec":$sec,"rows_per_sec":${rows / math.max(sec, 1e-9)},"provider":"rocksdb","state_rows":${stateRows.mkString("[", ",", "]")},"state_mem_bytes":${stateMem.mkString("[", ",", "]")},"state_rows_updated":${updated.mkString("[", ",", "]")},"state_rows_removed":${removed.mkString("[", ",", "]")},"bounded":$bounded,"batch_ms":$ms}"""
       } finally {
-        prevProvider match {
-          case Some(v) => spark.conf.set(providerKey, v)
-          case None => spark.conf.unset(providerKey)
-        }
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt)); ()
       }
     }

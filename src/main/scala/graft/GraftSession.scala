@@ -48,6 +48,21 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
 
+  /** Run `body` with session conf `kv` set, then restore the key's
+    * previous value, or unset it if it had none. Session-conf scope is
+    * safe here: every harness (Bench, Verify, the sequential test JVM)
+    * runs catalog queries one at a time on the shared session. */
+  def withConf[T](s: SparkSession, kv: (String, String))(body: => T): T = {
+    val (key, value) = kv
+    val prev = s.conf.getOption(key)
+    s.conf.set(key, value)
+    try body
+    finally prev match {
+      case Some(v) => s.conf.set(key, v)
+      case None => s.conf.unset(key)
+    }
+  }
+
   /** Session for local tools and tests. */
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
     val s = builder(s"local[$cores]", math.max(cores, 4)).getOrCreate()

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.GraftSession.withConf
 import graft.ops.Lineage._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -59,7 +60,7 @@ object ConnectedComponents {
       .select(col("__e.src").as("src"), col("__e.dst").as("dst"))
   }
 
-  /** Shuffle-partition count for a fixpoint loop, derived from the
+  /** Shuffle-partition setting for a fixpoint loop, derived from the
     * MEASURED edge count (round-17; the streaming statePartitions fix's
     * batch sibling, guide §2.2/§2.4 — measured rows, not plan stats: a
     * lineage-cut input's LogicalRDD reports the Long.MaxValue default
@@ -71,22 +72,12 @@ object ConnectedComponents {
     * per-partition fixed overhead, paid once per stage per round. Target
     * ~1 M edge rows (tens of MB) per partition, floor 1, cap 32k; on a
     * real cluster the same formula widens with the data instead of the
-    * core count. `spark.graft.cc.shufflePartitions` overrides for
-    * deployments whose label-to-edge ratio differs. Results are
-    * partition-count independent: labels are keyed min-aggregates and
-    * every consumer totally orders its output. */
-  private def withLoopPartitions[T](s: org.apache.spark.sql.SparkSession,
-                                    edgeRows: Long)(body: => T): T = {
-    val n = s.conf.getOption("spark.graft.cc.shufflePartitions")
-      .map(_.trim.toInt)
-      .getOrElse {
-        val per = 1L << 20
-        math.min(math.max(1L, (edgeRows + per - 1) / per), 32768L).toInt
-      }
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try body finally s.conf.set(key, prev)
+    * core count. Results are partition-count independent: labels are
+    * keyed min-aggregates and every consumer totally orders its output. */
+  private def loopPartitions(edgeRows: Long): (String, String) = {
+    val per = 1L << 20
+    val n = math.min(math.max(1L, (edgeRows + per - 1) / per), 32768L)
+    "spark.sql.shuffle.partitions" -> n.toString
   }
 
   /** Fixpoint min-label propagation over `edges` (long src/dst, symmetric).
@@ -101,76 +92,42 @@ object ConnectedComponents {
     // TWICE (the pointer-halving self-join), and both copies materialize
     // as concurrent AQE stages — with a lazy persist each would compute
     // the edge derivation before either fills the cache. The count also
-    // sizes the loop's shuffle partitions (withLoopPartitions).
+    // sizes the loop's shuffle partitions (loopPartitions).
     val nEdges = e.count()
-    withLoopPartitions(nodes.sparkSession, nEdges) {
-    var labels = nodes.select(col(idCol), col(idCol).as("component"))
-    // only checkpoints THIS loop created are ever released — the initial
-    // labels frame derives from the caller's `nodes` plan, and walking it
-    // could unpersist a checkpoint-backed input mid-job (truncated
-    // lineage = unrecoverable)
-    var ownCheckpoint: DataFrame = null
+    withConf(nodes.sparkSession, loopPartitions(nEdges)) {
     // Convergence probe: each round carries the node's PREVIOUS label
     // through the propagation so count_if(component != old) is a one-row
-    // agg on the round's own output — exactly ONE driver barrier per
-    // round, and (unlike a sum-of-labels probe) immune to Long overflow
-    // at any node count.
-    var changed = true
-    var rounds = 0
-    while (changed && rounds < maxRounds) {
-      val viaEdges = e
-        .join(labels, e("dst") === labels(idCol))
-        .select(e("src").as(idCol), col("component"),
-          lit(null).cast("long").as("__old"))
-      val propagated = labels
-        .select(col(idCol), col("component"), col("component").as("__old"))
-        .unionByName(viaEdges)
-        .groupBy(idCol)
-        .agg(min(col("component")).as("component"), max(col("__old")).as("__old"))
-      // pointer halving: jump to the label OF my label (components are
-      // themselves node ids and labels only decrease, so the lookup always
-      // improves-or-holds)
-      val parents = propagated
-        .select(col(idCol).as("__pid"), col("component").as("__pcomp"))
-      // localCheckpoint (lazy — the probe below materializes it) cuts
-      // the round's lineage to a LogicalRDD. Without this the self-join
-      // doubles the logical plan EVERY round and analyzer/optimizer time
-      // grows exponentially — measured 3 s -> 11 s -> stuck by round 5 on
-      // 5000 rows. With it, per-round plan size (and driver time) is
-      // constant; this is the per-round-checkpoint discipline any
-      // iterative-graph job needs at 100 TB (there, checkpoint() to
-      // storage so a lost executor doesn't replay the whole loop).
-      val next = propagated
-        .join(parents, propagated("component") === parents("__pid"))
-        .select(col(idCol), col("__pcomp").as("component"), col("__old"))
-        .cutLineage(false)
-      val nChanged = next
-        .agg(count_if(col("component") =!= col("__old"))).first().getLong(0)
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        Console.err.println(s"[cc] round $rounds changed=$nChanged")
-      changed = nChanged > 0
-      // the new checkpoint fully materialized (the probe ran), so the
-      // PREVIOUS round's checkpoint blocks are dead weight — release them
-      // now instead of waiting for the ContextCleaner to notice
-      if (ownCheckpoint ne null) releaseCheckpoint(ownCheckpoint)
-      ownCheckpoint = next
-      labels = next.select(col(idCol), col("component"))
-      rounds += 1
+    // agg on the round's own output — and (unlike a sum-of-labels probe)
+    // immune to Long overflow at any node count. The seed labels derive
+    // from the caller's `nodes` plan, so iterate never releases them.
+    val seed = nodes.select(col(idCol), col(idCol).as("component"))
+    val loop = Lineage.iterate(seed, maxRounds,
+      converged = d =>
+        d.agg(count_if(col("component") =!= col("__old"))).first().getLong(0) == 0) {
+      (frame, _) =>
+        val labels = frame.select(col(idCol), col("component"))
+        val viaEdges = e
+          .join(labels, e("dst") === labels(idCol))
+          .select(e("src").as(idCol), col("component"),
+            lit(null).cast("long").as("__old"))
+        val propagated = labels
+          .select(col(idCol), col("component"), col("component").as("__old"))
+          .unionByName(viaEdges)
+          .groupBy(idCol)
+          .agg(min(col("component")).as("component"), max(col("__old")).as("__old"))
+        // pointer halving: jump to the label OF my label (components are
+        // themselves node ids and labels only decrease, so the lookup
+        // always improves-or-holds)
+        val parents = propagated
+          .select(col(idCol).as("__pid"), col("component").as("__pcomp"))
+        propagated
+          .join(parents, propagated("component") === parents("__pid"))
+          .select(col(idCol), col("__pcomp").as("component"), col("__old"))
     }
     e.unpersist()
-    (labels, rounds)
+    (loop.frame.select(col(idCol), col("component")), loop.rounds)
     }
   }
-
-  /** Unpersist the cached RDDs behind a localCheckpoint'd frame —
-    * localCheckpoint caches its RDD outside the dataset cache manager, so
-    * `Dataset.unpersist` cannot release it. Now the shared
-    * [[Lineage.releaseCut]] (round 15: the graph-query loops adopted the
-    * same eager-release discipline); the caller-safety contract lives on
-    * its scaladoc. [[run]] tracks its own cuts in `ownCheckpoint`;
-    * [[alternatingComponents]]' edge frame is loop-checkpointed before
-    * any release. */
-  private def releaseCheckpoint(df: DataFrame): Unit = Lineage.releaseCut(df)
 
   /** Large-star/small-star alternation (the two-phase MapReduce CC of
     * Kiveris et al., "Connected Components in MapReduce and Beyond",
@@ -188,9 +145,8 @@ object ConnectedComponents {
     *    that minimum.
     *
     * Both phases are one groupBy-min + one join over the edge list; per
-    * round the set is canonicalized/distinct'd and localCheckpoint'd
-    * (same lineage-truncation discipline as [[run]]; durable
-    * checkpoint() at real scale). Convergence probe: (count, xor-hash)
+    * round the set is canonicalized/distinct'd and cut by
+    * [[Lineage.iterate]]. Convergence probe: (count, xor-hash)
     * signature — one tiny job per round.
     *
     * Terminal state: every edge is (componentMin, member). Labels follow
@@ -198,7 +154,7 @@ object ConnectedComponents {
     */
   def alternatingComponents(nodes: DataFrame, edges: DataFrame, idCol: String,
                             maxRounds: Int = 30): (DataFrame, Int) = {
-    var e = edges
+    val seed = edges
       .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
       .filter(col("a") =!= col("b") && col("a").isNotNull)
       .distinct()
@@ -207,13 +163,17 @@ object ConnectedComponents {
       val r = d.agg(count(lit(1)), coalesce(sum(xxhash64(col("a"), col("b"))), lit(0L))).first()
       (r.getLong(0), r.getLong(1))
     }
-    var sig = signature(e)
+    var sig = signature(seed)
     // the signature's count is the measured edge cardinality — size the
-    // loop's shuffle partitions from it (see withLoopPartitions)
-    withLoopPartitions(nodes.sparkSession, sig._1) {
-    var rounds = 0
-    var stable = false
-    while (!stable && rounds < maxRounds) {
+    // loop's shuffle partitions from it (see loopPartitions)
+    withConf(nodes.sparkSession, loopPartitions(sig._1)) {
+    val stable = (d: DataFrame) => {
+      val next = signature(d)
+      val same = next == sig
+      sig = next
+      same
+    }
+    val loop = Lineage.iterate(seed, maxRounds, converged = stable) { (e, _) =>
       val sym = e.select(col("a").as("src"), col("b").as("dst"))
         .unionAll(e.select(col("b").as("src"), col("a").as("dst")))
       // large-star: m(u) = min(N(u) ∪ {u}); (v, m(u)) for v > u.
@@ -238,19 +198,13 @@ object ConnectedComponents {
         .select(col("__e.src").as("src"), col("__e.dst").as("dst"))
       val smaller = symL.filter(col("dst") < col("src"))
       val smins = smaller.groupBy("src").agg(min("dst").as("m"))
-      val small = smaller.join(smins, "src")
+      smaller.join(smins, "src")
         .filter(col("dst") =!= col("m"))
         .select(col("m").as("a"), col("dst").as("b"))
         .unionAll(smins.select(col("m").as("a"), col("src").as("b")))
         .distinct()
-        .cutLineage(false)
-      val nextSig = signature(small)
-      stable = nextSig == sig
-      sig = nextSig
-      releaseCheckpoint(e) // materialized replacement exists; free the old blocks
-      e = small
-      rounds += 1
     }
+    val e = loop.frame
     // min-agg (not a raw join): at the fixpoint each member carries one
     // star edge, but if maxRounds cut the loop short a member may still
     // hold several — min keeps the label well-defined either way
@@ -258,7 +212,7 @@ object ConnectedComponents {
     val labels = nodes.select(col(idCol))
       .join(roots, Seq(idCol), "left")
       .select(col(idCol), coalesce(col("__root"), col(idCol)).as("component"))
-    (labels, rounds)
+    (labels, loop.rounds)
     }
   }
 }

@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
 /** Lineage truncation for iterative/reused frames.
@@ -36,26 +37,107 @@ object Lineage {
       ds.localCheckpoint(eager, StorageLevel.MEMORY_AND_DISK_SER)
   }
 
-  /** Release a superseded checkpoint's blocks eagerly instead of waiting
-    * for the ContextCleaner to notice the dead reference — the
-    * loop-carried-frame discipline (PLANS.md "cutLineage loop-site
-    * classification"): once a round's replacement frame has MATERIALIZED
-    * (eager cut), the previous round's blocks are dead weight, and
-    * releasing them bounds the loop's block-store footprint by the
-    * current frame instead of rounds × frame.
-    *
-    * ONLY call this on a frame the caller's own loop checkpointed and
-    * that nothing downstream references (a caller-derived frame's
-    * lineage can contain the CALLER's checkpoint-backed inputs, and
-    * unpersisting those mid-job is unrecoverable — truncated lineage
-    * cannot recompute). The walk unpersists every LogicalRDD in the
-    * frame's analyzed plan; for a frame returned by `cutLineage` that
-    * is exactly its own checkpoint RDD. */
+  /** Unpersist every LogicalRDD in `df`'s analyzed plan. For a frame
+    * returned by `cutLineage` that is exactly its own checkpoint RDD
+    * (`Dataset.unpersist` cannot release it: localCheckpoint caches the
+    * RDD outside the dataset cache manager). Never call it on a DERIVED
+    * frame: its plan can reach checkpoint-backed inputs that other
+    * consumers still read, and truncated lineage cannot recompute. */
   def releaseCut(df: Dataset[_]): Unit =
     df.queryExecution.analyzed.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false); ()
+      case l: LogicalRDD => l.rdd.unpersist(false); ()
       case _ => ()
     }
+
+  private def isCut(df: Dataset[_]): Boolean =
+    df.queryExecution.analyzed.isInstanceOf[LogicalRDD]
+
+  /** How [[iterate]] treats the last round's frame. */
+  sealed trait LastRound
+  object LastRound {
+    /** Cut like every other round. */
+    case object Cut extends LastRound
+    /** Returned un-cut: it feeds only the caller's final plan, so cutting
+      * it would pay a materialization job to re-read the frame once. Its
+      * plan reads the previous round's cut, which stays live. */
+    case object Uncut extends LastRound
+    /** Built for the step's side effects only (its own cuts); the frame
+      * itself is never read, so it is not cut and the previous round's
+      * cut is released once the step returns. */
+    case object Unread extends LastRound
+  }
+
+  /** The loop's final frame, the frame before it, and the rounds run. */
+  final case class Iterated(frame: DataFrame, previous: DataFrame, rounds: Int)
+
+  /** The cut-per-round fixpoint loop every iterative operator shares.
+    *
+    * Round r (1-based) runs `step(frame, r)` and cuts its result, so the
+    * analyzer and optimizer see a LogicalRDD each round instead of a plan
+    * that grows with every round (with a self-join it doubles: CC measured
+    * 3 s -> 11 s -> stuck by round 5 on 5000 rows). The cut is eager, or
+    * lazy when `converged` is given: the probe's one-row action then
+    * materializes the round, one driver barrier per round. The loop stops
+    * after `maxRounds` rounds or at the first round whose frame the probe
+    * reports converged; that round counts.
+    *
+    * Retention: once a round's cut has materialized, the superseded frame
+    * is released — the round before it instead when `keepPrevious`, whose
+    * caller reads the last two frames — so the block store holds the
+    * current frame, not rounds x frame, and nothing waits for the
+    * ContextCleaner. A frame is released only if it is a bare cut (the
+    * test [[AppendOnlyCuts.add]] uses): a derived seed's plan can reach
+    * the caller's checkpoint-backed inputs, so it is never walked.
+    * `inputs` are loop-invariant cuts the step reads; they are released
+    * after the last round unless that round is [[LastRound.Uncut]], whose
+    * plan still reads them.
+    *
+    * Append-only loops pass `deltas`: the seed and every round's cut are
+    * added to it and never released here, since the running union reads
+    * them all; the accumulator bounds their count. When an add coalesces,
+    * the next step receives the merged union instead of the (released)
+    * round frame.
+    *
+    * At 100 TB the same loop would cut with durable `checkpoint()` so a
+    * lost executor does not replay every round (PLANS.md "cutLineage
+    * loop-site classification" lists each site's mode). */
+  def iterate(seed: DataFrame, maxRounds: Int,
+              converged: DataFrame => Boolean = null,
+              last: LastRound = LastRound.Cut,
+              keepPrevious: Boolean = false,
+              inputs: Seq[DataFrame] = Nil,
+              deltas: AppendOnlyCuts = null)
+             (step: (DataFrame, Int) => DataFrame): Iterated = {
+    def release(df: DataFrame): Unit = if ((df ne null) && isCut(df)) releaseCut(df)
+    // append-only frames stay in `deltas`, which owns their release
+    def supersede(df: DataFrame): Unit = if (deltas eq null) release(df)
+    if (deltas ne null) deltas.add(seed)
+    var previous: DataFrame = null
+    var frame = seed
+    var rounds = 0
+    var done = false
+    while (!done && rounds < maxRounds) {
+      rounds += 1
+      val plan = step(frame, rounds)
+      if (rounds == maxRounds && last != LastRound.Cut) {
+        if (last == LastRound.Unread) {
+          supersede(frame)
+          if (keepPrevious) supersede(previous)
+        }
+        previous = frame
+        frame = plan
+      } else {
+        val next = plan.cutLineage(eager = converged eq null)
+        if (converged ne null) done = converged(next)
+        val carried = if ((deltas ne null) && deltas.add(next)) deltas.union else next
+        supersede(if (keepPrevious) previous else frame)
+        previous = frame
+        frame = carried
+      }
+    }
+    if (last != LastRound.Uncut) inputs.foreach(release)
+    Iterated(frame, previous, rounds)
+  }
 
   /** Append-only checkpoint accumulator — the guard the loop-site
     * classification table's APPEND-ONLY rows (PLANS.md) relied on a
@@ -84,7 +166,7 @@ object Lineage {
   final class AppendOnlyCuts(coalesceEvery: Int) {
     require(coalesceEvery >= 1, s"coalesceEvery must be >= 1, got $coalesceEvery")
     private val frames =
-      scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
+      scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     private var merges = 0
     /** Live checkpointed frames (bounded at coalesceEvery + 1). */
     def frameCount: Int = frames.length
@@ -92,9 +174,8 @@ object Lineage {
     def coalesceCount: Int = merges
     /** Append a freshly cut delta; returns true iff this add coalesced
       * (callers holding views of earlier deltas must re-derive them). */
-    def add(delta: org.apache.spark.sql.DataFrame): Boolean = {
-      require(delta.queryExecution.analyzed
-          .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD],
+    def add(delta: DataFrame): Boolean = {
+      require(isCut(delta),
         "AppendOnlyCuts.add requires a frame produced by cutLineage: " +
           "coalescing releases the added frame's blocks, and a derived " +
           "plan would release its INPUTS' checkpoints instead " +
@@ -110,7 +191,7 @@ object Lineage {
       } else false
     }
     /** The running union of everything appended so far. */
-    def union: org.apache.spark.sql.DataFrame = {
+    def union: DataFrame = {
       require(frames.nonEmpty, "AppendOnlyCuts.union on an empty accumulator")
       frames.reduce(_ unionAll _)
     }

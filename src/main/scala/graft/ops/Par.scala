@@ -48,8 +48,7 @@ import org.apache.spark.sql.Dataset
   *    spill-and-finish queries into hard OOMs by running 32 concurrent
   *    CPU-heavy tasks against a ~77 MiB unified pool). The cap mirrors
   *    UnifiedMemoryManager's pool arithmetic from public session confs
-  *    and floors each would-be-concurrent task at
-  *    `spark.graft.spread.taskMemFloor` (default 16 MiB) of pool share;
+  *    and floors each would-be-concurrent task at 16 MiB of pool share;
   *    on any production-sized heap the cap is far above core count and
   *    never binds.
   */
@@ -57,22 +56,12 @@ object Par {
   /** Bytes of (estimated) input one task should carry through a
     * CPU-heavy row-local pass. Deliberately far below the scan-split
     * size: these passes cost orders of magnitude more CPU per byte than
-    * a plain scan. Overridable for experiments via
-    * `spark.graft.spread.bytesPerTask`. */
-  private val DefaultBytesPerTask = 32L * 1024
+    * a plain scan. */
+  private val BytesPerTask = 32L * 1024
 
   /** Minimum unified-pool share a concurrent spread task must be able to
     * claim before width stops growing (see the memory-cap note above). */
-  private val DefaultTaskMemFloor = 16L * 1024 * 1024
-
-  private def longConf(ds: Dataset[_], key: String, default: Long): Long =
-    ds.sparkSession.conf.getOption(key).map { v =>
-      try v.trim.toLong
-      catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"$key must be a long, got '$v'")
-      }
-    }.getOrElse(default)
+  private val TaskMemFloor = 16L * 1024 * 1024
 
   /** Width ceiling from execution memory: unified pool bytes (the
     * UnifiedMemoryManager arithmetic — (systemMemory − reserved) ×
@@ -87,17 +76,14 @@ object Par {
     val fraction = conf.getOption("spark.memory.fraction")
       .map(_.trim.toDouble).getOrElse(0.6)
     val pool = math.max(0L, ((sysMem - reserved) * fraction).toLong)
-    math.max(1L, pool / longConf(ds, "spark.graft.spread.taskMemFloor",
-      DefaultTaskMemFloor))
+    math.max(1L, pool / TaskMemFloor)
   }
 
   def spread[T](ds: Dataset[T]): Dataset[T] = {
     val spark = ds.sparkSession
-    val bytesPerTask =
-      longConf(ds, "spark.graft.spread.bytesPerTask", DefaultBytesPerTask)
     val bytes = ds.queryExecution.optimizedPlan.stats.sizeInBytes
     val cap = spark.sparkContext.defaultParallelism
-    val n = bytes./(bytesPerTask)
+    val n = bytes./(BytesPerTask)
       .min(BigInt(cap)).min(BigInt(memWidthCap(ds))).max(BigInt(1)).toInt
     if (n <= 1) ds
     else {

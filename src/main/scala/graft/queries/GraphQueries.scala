@@ -120,9 +120,7 @@ object GraphQueries {
     * frontier-sized probe, bucket-able by node id at cluster scale — then
     * anti-joins the visited set to keep only newly discovered nodes, so
     * per-iteration work is frontier-edges + a node-sized anti join, never
-    * edge-set × visited-set. Lineage is truncated per round
-    * (localCheckpoint), the same iterative-plan discipline as
-    * [[pagerank]] and ops/ConnectedComponents. */
+    * edge-set × visited-set. Rounds run through [[iterate]]. */
   def bfsLevels(edgesIn: org.apache.spark.sql.DataFrame,
                 seeds: org.apache.spark.sql.DataFrame,
                 maxLvl: Int,
@@ -130,7 +128,7 @@ object GraphQueries {
     val e = edgesIn.cutLineage()
     val seeded = seeds.select(col("id"), lit(0).as("lvl")).cutLineage()
     // The visited set is an APPEND-ONLY union of per-round frontiers, so
-    // only each round's `next` is checkpointed; the anti-join and the
+    // only each round's delta is checkpointed; the anti-join and the
     // final result read the union of those already-cut frames directly.
     // Re-checkpointing the accumulated union every round (the pre-round-14
     // shape) re-serialized the ENTIRE visited set every round — O(rounds²)
@@ -138,45 +136,25 @@ object GraphQueries {
     // second full copy of the visited set in the block store. The union
     // of <= coalesceEvery LogicalRDDs keeps the logical plan linear in
     // rounds (the exponential blowup cutLineage exists to stop comes from
-    // self-joins, not unions). Retention (round-16 guard, was a comment):
-    // the AppendOnlyCuts accumulator coalesces the live deltas into ONE
-    // fresh cut every `coalesceEvery` rounds and releases the superseded
-    // blocks, so a deep BFS holds at most coalesceEvery + 1 block sets —
-    // one serialized copy of the visited set plus the uncoalesced tail —
-    // instead of one per round. Each visited row is re-serialized at most
-    // once per coalesceEvery rounds (amortized O(1) per row). At the
-    // catalog's maxLvl=3 no coalesce ever fires and the plan is
-    // byte-identical to rounds 14–15; LineageSpec/GraphOpsSpec pin both
-    // the deep-loop bound and the correctness of coalesced levels.
-    val acc = new graft.ops.Lineage.AppendOnlyCuts(coalesceEvery)
-    acc.add(seeded)
-    var frontier = seeded.select("id")
+    // self-joins, not unions). The AppendOnlyCuts accumulator coalesces
+    // the live deltas into ONE fresh cut every `coalesceEvery` rounds, so
+    // a deep BFS holds at most coalesceEvery + 1 block sets, and each
+    // visited row is re-serialized at most once per coalesceEvery rounds.
+    // LineageSpec/GraphOpsSpec pin both the deep-loop bound and the
+    // correctness of coalesced levels.
     // the LAST level feeds nothing downstream — no next frontier, no
-    // later anti-join — so cutting it would pay an eager materialization
-    // job purely to re-read the frame once in the output union (round-17;
-    // the same last-round-uncut discipline as the BPE merge loop). Every
-    // non-final level stays cut: its delta is read by every later round's
-    // anti-join and the next frontier.
-    var last: org.apache.spark.sql.DataFrame = null
-    (1 to maxLvl).foreach { l =>
-      val visited = acc.union.select("id")
-      val nextPlan = e.join(frontier.select(col("id").as("src")), "src")
-        .select(col("dst").as("id")).distinct()
-        .join(visited, Seq("id"), "left_anti")
-        .select(col("id"), lit(l).as("lvl"))
-      if (l == maxLvl) last = nextPlan
-      else {
-        val next = nextPlan.cutLineage()
-        // a coalesce releases the individual delta the frontier view would
-        // have aliased — re-derive this round's frontier from the merged
-        // frame instead (filter on the lvl column of a cut frame: cheap,
-        // scan-local, no shuffle)
-        frontier =
-          if (acc.add(next)) acc.union.filter(col("lvl") === l).select("id")
-          else next.select("id")
-      }
+    // later anti-join — so it stays un-cut (LastRound.Uncut)
+    val acc = new AppendOnlyCuts(coalesceEvery)
+    val loop = iterate(seeded, maxLvl, last = LastRound.Uncut, deltas = acc) {
+      (level, l) =>
+        // after a coalesce `level` is the merged union, so read this
+        // round's frontier out of it by level (scan-local, no shuffle)
+        e.join(level.filter(col("lvl") === l - 1).select(col("id").as("src")), "src")
+          .select(col("dst").as("id")).distinct()
+          .join(acc.union.select("id"), Seq("id"), "left_anti")
+          .select(col("id"), lit(l).as("lvl"))
     }
-    if (last eq null) acc.union else acc.union.unionAll(last)
+    if (loop.rounds == 0) acc.union else acc.union.unionAll(loop.frame)
   }
 
   val qs: Seq[Q] = Seq(
@@ -340,33 +318,24 @@ object GraphQueries {
               .otherwise(col("c_nationkey")).cast("bigint").as("lbl0"))
         // pack invariant asserted, not assumed: a label outside [0,99]
         // would collide with the count digits and elect the wrong majority
-        var labels = rawLbl.select(col("id"),
+        val seed = rawLbl.select(col("id"),
           when(col("lbl0").between(0, 8589934591L), col("lbl0"))
             .otherwise(raise_error(concat(
               lit("g_label_propagation pack overflow: label "),
               col("lbl0").cast("string"), lit(" outside [0,2^33)")))).as("lbl"))
           .cutLineage()
-        var prev = labels
-        (1 to Iters).foreach { _ =>
-          // the round-(r-2) frame: still bound to `prev` until the line
-          // below, and the only consumer beyond the loop is the churn
-          // probe, which reads the LAST TWO rounds (labels + prev) — so
-          // anything older is dead once this round's cut materializes
-          val stale = prev
-          prev = labels
-          val counts = edges
-            .join(labels.withColumnRenamed("id", "src"), "src")
-            .groupBy(col("dst").as("id"), col("lbl"))
-            .agg(count(lit(1)).as("cnt"))
-          labels = counts.groupBy("id")
-            .agg((lit(8589934591L) - (max(col("cnt") * 8589934592L + (lit(8589934591L) - col("lbl"))) % 8589934592L)).as("lbl"))
-            .cutLineage()
-          // at round 1 stale eq prev (both the seed frame) — nothing to free
-          if (stale ne prev) graft.ops.Lineage.releaseCut(stale)
+        // the churn probe reads the last TWO label rounds (keepPrevious);
+        // the edge cut is released after its last propagation join
+        val loop = iterate(seed, Iters, keepPrevious = true, inputs = Seq(edges)) {
+          (labels, _) =>
+            edges
+              .join(labels.withColumnRenamed("id", "src"), "src")
+              .groupBy(col("dst").as("id"), col("lbl"))
+              .agg(count(lit(1)).as("cnt"))
+              .groupBy("id")
+              .agg((lit(8589934591L) - (max(col("cnt") * 8589934592L + (lit(8589934591L) - col("lbl"))) % 8589934592L)).as("lbl"))
         }
-        // the edge cut fed its last propagation join; churn and the
-        // output read only the last two label checkpoints
-        graft.ops.Lineage.releaseCut(edges)
+        val (labels, prev) = (loop.frame, loop.previous)
         val churn = labels.select(col("id"), col("lbl").as("new_lbl"))
           .join(prev.select(col("id"), col("lbl").as("old_lbl")), "id")
           .agg(sum(when(col("new_lbl") =!= col("old_lbl"), 1L).otherwise(0L)).as("n_changed"))
@@ -614,26 +583,16 @@ object GraphQueries {
           .select(col("__e.src").as("src"), col("__e.dst").as("dst"),
             col("__e.w").as("w"))
           .cutLineage()
-        var dist = Tables.customer(s, dir)
+        val seed = Tables.customer(s, dir)
           .agg(min("c_custkey").cast("long").as("id"))
           .select(col("id"), lit(0L).as("d"))
           .cutLineage()
-        (1 to 4).foreach { _ =>
-          val prev = dist
-          dist = dist
+        val dist = iterate(seed, 4, inputs = Seq(e)) { (dist, _) =>
+          dist
             .unionAll(e.join(dist.withColumnRenamed("id", "src"), "src")
               .select(col("dst").as("id"), (col("d") + col("w")).as("d")))
             .groupBy("id").agg(min("d").as("d"))
-            .cutLineage()
-          // loop-carried frame: the new cut has materialized (eager), so
-          // the previous round's checkpoint blocks are dead — release now
-          // rather than waiting for the ContextCleaner (PLANS "cutLineage
-          // loop-site classification"; pinned in GraphOpsSpec)
-          graft.ops.Lineage.releaseCut(prev)
-        }
-        // the edge cut served its last join; the result reads only the
-        // final dist checkpoint
-        graft.ops.Lineage.releaseCut(e)
+        }.frame
         dist.select(col("id"), col("d").as("dist_cents")).orderBy("id")
       }),
 
@@ -853,7 +812,7 @@ object GraphQueries {
         // ONE generator pass, not union(stars, stars.reversed), so the
         // edge derivation's reduce side runs once (the starEdges
         // discipline, guide §1.2)
-        var edges = partEdges(s, dir)
+        val edges = partEdges(s, dir)
           .select(explode(array(
             struct(col("u"), col("v")),
             struct(col("v").as("u"), col("u").as("v")))).as("__e"))
@@ -864,16 +823,14 @@ object GraphQueries {
         // frame round 1 was about to derive anyway (round-17 continuation)
         var allNodes: org.apache.spark.sql.DataFrame = null
         // the peeled set is append-only: each round's `out` is cut once
-        // and the running union reads those frames directly — re-cutting
-        // the accumulated union every round re-serialized the whole
-        // peeled set each time (see bfsLevels for the shape rationale).
-        // Round 16: the deltas live in the shared AppendOnlyCuts guard —
-        // at 3 rounds it never coalesces (plan unchanged), but a deeper
-        // peel inherits the bounded block-set contract instead of a
-        // comment (LineageSpec pins the bound).
-        val peeledAcc = new graft.ops.Lineage.AppendOnlyCuts(8)
+        // and the running union reads those frames directly (see
+        // bfsLevels for the shape rationale), bounded by AppendOnlyCuts.
+        // The residual edge set is loop-carried (it shrinks in place); the
+        // last round's residual is never read (LastRound.Unread), so it is
+        // never cut.
+        val peeledAcc = new AppendOnlyCuts(8)
         def peeled: org.apache.spark.sql.DataFrame = peeledAcc.union
-        (1 to 3).foreach { r =>
+        iterate(edges, 3, last = LastRound.Unread) { (edges, r) =>
           val degAll = edges.groupBy(col("u").as("node"))
             .agg(count(lit(1)).as("d"))
           // round 1's degree frame doubles as the node set: cut it once,
@@ -895,20 +852,10 @@ object GraphQueries {
           val out = gone.distinct().select(col("node"), lit(r).as("peel_round"))
             .cutLineage()
           peeledAcc.add(out)
-          val prevEdges = edges
-          edges = edges
+          edges
             .join(out.select(col("node").as("u")), Seq("u"), "left_anti")
             .join(out.select(col("node").as("v")), Seq("v"), "left_anti")
-            .cutLineage()
-          // the residual edge set is LOOP-CARRIED (shrinks in place): the
-          // new cut has materialized, so the previous round's blocks are
-          // dead — release eagerly. The `out` deltas are APPEND-ONLY and
-          // stay pinned: the running `peeled` union references them all.
-          graft.ops.Lineage.releaseCut(prevEdges)
         }
-        // the final residual edge frame is dead too: the output reads
-        // only allNodes and the peel deltas
-        graft.ops.Lineage.releaseCut(edges)
         allNodes
           .join(peeled, Seq("node"), "left")
           .select(col("node"),

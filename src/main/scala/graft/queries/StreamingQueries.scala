@@ -98,7 +98,7 @@ object StreamingQueries {
     }
   }
 
-  /** State/shuffle partition count for a replay stream, derived from the
+  /** State/shuffle partition setting for a replay stream, derived from the
     * bytes actually fed to it (round-16 optimization, guide §2.2/§2.4).
     * Stateful streaming pins its state-store partitioning from
     * spark.sql.shuffle.partitions at query start and AQE never revisits
@@ -112,30 +112,15 @@ object StreamingQueries {
     * real cluster a core-count default is equally wrong in the other
     * direction — state should be partitioned by its SIZE. Target ~32 MiB
     * of parquet feed per state partition (in-store state of these replay
-    * shapes is input-bounded by the watermark horizon), floor 1, cap 32k;
-    * spark.graft.stream.statePartitions overrides for deployments whose
-    * state-to-input ratio differs. Results are partition-count
-    * independent: watermarks are global (max event time across
-    * partitions), state is hash-partitioned by key, and every replay
-    * query's output is totally ordered before hashing. */
-  private def statePartitions(s: SparkSession, feedBytes: Long): Int =
-    s.conf.getOption("spark.graft.stream.statePartitions")
-      .map(_.trim.toInt)
-      .getOrElse {
-        val perPartition = 32L * 1024 * 1024
-        math.min(math.max(1L, (feedBytes + perPartition - 1) / perPartition),
-          32768L).toInt
-      }
-
-  /** Run `body` with spark.sql.shuffle.partitions set to `n`, restoring
-    * the previous value afterwards. Session-conf scope is safe here:
-    * every harness (Bench, Verify, the sequential test JVM) runs catalog
-    * queries one at a time on the shared session. */
-  private def withShufflePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try body finally s.conf.set(key, prev)
+    * shapes is input-bounded by the watermark horizon), floor 1, cap 32k.
+    * Results are partition-count independent: watermarks are global
+    * (max event time across partitions), state is hash-partitioned by
+    * key, and every replay query's output is totally ordered before
+    * hashing. */
+  private def statePartitions(feedBytes: Long): (String, String) = {
+    val perPartition = 32L * 1024 * 1024
+    val n = math.min(math.max(1L, (feedBytes + perPartition - 1) / perPartition), 32768L)
+    "spark.sql.shuffle.partitions" -> n.toString
   }
 
   /** Run `build(stream)` over a file-source replay of `feed` (schema =
@@ -178,7 +163,7 @@ object StreamingQueries {
       Option(d.listFiles()).getOrElse(Array.empty[File]).map(_.length()).sum
     }.sum
     s.catalog.dropTempView(sinkName)
-    val q = withShufflePartitions(s, statePartitions(s, feedBytes)) {
+    val q = graft.GraftSession.withConf(s, statePartitions(feedBytes)) {
       val streams = dirs.map { case (feed, streamDir) =>
         s.readStream
           .schema(feed.schema)
@@ -578,7 +563,7 @@ object StreamingQueries {
           val feedBytes = Option(streamDir.listFiles())
             .getOrElse(Array.empty[File]).map(_.length()).sum
           s.catalog.dropTempView("w_stream_update_sink")
-          val q = withShufflePartitions(s, statePartitions(s, feedBytes)) {
+          val q = graft.GraftSession.withConf(s, statePartitions(feedBytes)) {
             val stream = s.readStream
               .schema(ev.schema)
               .option("maxFilesPerTrigger", 1)
@@ -648,11 +633,8 @@ object StreamingQueries {
           |ORDER BY b.user_id, b.ep""".stripMargin),
       (s, dir) => {
         val tmp = java.nio.file.Files.createTempDirectory("graft-tws").toFile
-        val providerKey = "spark.sql.streaming.stateStore.providerClass"
-        val prevProvider = s.conf.getOption(providerKey)
-        try {
-          s.conf.set(providerKey,
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+        try graft.GraftSession.withConf(s, "spark.sql.streaming.stateStore.providerClass" ->
+            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
           val ev = Tables.events(s, dir)
             .filter(col("ts").isNotNull && col("event_type") === "purchase")
             .select(col("user_id"), col("ts"))
@@ -674,10 +656,6 @@ object StreamingQueries {
             })
             .orderBy("user_id", "ep")
         } finally {
-          prevProvider match {
-            case Some(v) => s.conf.set(providerKey, v)
-            case None => s.conf.unset(providerKey)
-          }
           org.apache.commons.io.FileUtils.deleteQuietly(tmp); ()
         }
       }),

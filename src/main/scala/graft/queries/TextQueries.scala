@@ -1116,20 +1116,17 @@ object TextQueries {
     val wf = Tables.documents(s, dir)
       .select(explode(Text.tokens(col("text"))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("n"))
-    // Rounds 1..n-1 are lineage-cut (the pagerank/CC iterative
-    // discipline): un-cut, round r's pair count re-derived rounds
-    // 1..r-1's merge folds — and t_bpe_apply's final segmentation re-ran
-    // all three — over the vocabulary, serially in the one AQE-coalesced
-    // partition (measured ~1 s of the query at sf0.1). The LAST round
-    // stays chained so the final plan keeps the sort-limit + broadcast
-    // best-pair shape PlanShapeSpec pins (the cut rounds run the
-    // identical shape inside their materialization jobs); superseded
-    // round cuts are released eagerly (loop-carried frames).
-    // the seed state is cut too: round 1 reads it twice (best-pair
-    // subtree + merge subtree), and un-cut both re-ran the corpus
-    // word-count map
-    var st = wf.withColumn("syms", split(col("word"), "")).cutLineage()
-    (1 to 3).foreach { round =>
+    // Un-cut, round r's pair count re-derived rounds 1..r-1's merge folds
+    // — and t_bpe_apply's final segmentation re-ran all three — over the
+    // vocabulary, serially in the one AQE-coalesced partition (measured
+    // ~1 s of the query at sf0.1). The LAST round stays un-cut so the
+    // final plan keeps the sort-limit + broadcast best-pair shape
+    // PlanShapeSpec pins (the cut rounds run the identical shape inside
+    // their materialization jobs). The seed state is cut too: round 1
+    // reads it twice (best-pair subtree + merge subtree), and un-cut both
+    // re-ran the corpus word-count map.
+    val seed = wf.withColumn("syms", split(col("word"), "")).cutLineage()
+    iterate(seed, 3, last = LastRound.Uncut) { (st, _) =>
       val pairs = st
         .select(col("n"), expr(
           """CASE WHEN size(syms) >= 2
@@ -1143,21 +1140,13 @@ object TextQueries {
         .agg(sum(col("n")).as("cnt"))
       val best = pairs.orderBy(col("cnt").desc, col("x"), col("y"))
         .limit(1).select(col("x").as("bx"), col("y").as("by"))
-      val stale = st
-      val merged = st.crossJoin(broadcast(best))
+      st.crossJoin(broadcast(best))
         .withColumn("syms", expr(
           """aggregate(syms, CAST(array() AS ARRAY<STRING>), (acc, s) ->
             |  IF(size(acc) > 0 AND element_at(acc, -1) = bx AND s = by,
             |     concat(slice(acc, 1, size(acc) - 1), array(concat(bx, by))),
             |     concat(acc, array(s))))""".stripMargin))
         .drop("bx", "by")
-      st = if (round < 3) merged.cutLineage() else merged
-      // the replacement cut materialized eagerly; release the superseded
-      // round's blocks (round 1's stale frame is the SEED cut — its
-      // checkpoint blocks are safe to free because round 1's replacement
-      // was eagerly cut first and nothing else references the seed)
-      if (round < 3) graft.ops.Lineage.releaseCut(stale)
-    }
-    st
+    }.frame
   }
 }

@@ -1,5 +1,8 @@
 package graft.ops
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{count, max}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
 import graft.SparkSpec
@@ -98,5 +101,89 @@ class LineageSpec extends SparkSpec {
       "lazy cutLineage must still use serialized storage once materialized")
     after.values.foreach(_.unpersist(blocking = false))
     assert(lazyNew.isEmpty || lazyNew.forall(!_.getStorageLevel.deserialized))
+  }
+  // --- Lineage.iterate: the shared cut-per-round loop's retention rules ---
+
+  private def rddId(df: DataFrame): Int =
+    df.queryExecution.analyzed.asInstanceOf[LogicalRDD].rdd.id
+  private def live(df: DataFrame): Boolean =
+    spark.sparkContext.getPersistentRDDs.contains(rddId(df))
+  private def materialized(df: DataFrame): Boolean =
+    spark.sparkContext.getRDDStorageInfo
+      .exists(i => i.id == rddId(df) && i.numCachedPartitions > 0)
+
+  test("iterate releases a superseded cut only after its replacement materializes") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val base = sc.getPersistentRDDs.keySet
+    val invariant = (1 to 10).toDF("k").cutLineage()
+    val seed = (1 to 100).toDF("n").cutLineage()
+    val seen = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    val loop = Lineage.iterate(seed, 4, inputs = Seq(invariant)) { (df, r) =>
+      // round r reads round r-1's cut: live and materialized; the frame it
+      // superseded (round r-2's) is already gone
+      assert(live(df) && materialized(df), s"round $r input not live")
+      if (r >= 2) assert(!live(seen(r - 2)), s"round ${r - 2} cut outlived round ${r - 1}")
+      seen += df
+      df.crossJoin(invariant.agg(count($"k").as("c")))
+        .select(($"n" + $"c" - 9).cast("int").as("n"))
+    }
+    assert(loop.rounds === 4)
+    assert(loop.frame.as[Int].collect().sorted === (5 to 104).toArray)
+    assert(seen.forall(!live(_)), "a superseded round cut survived the loop")
+    assert(!live(invariant), "loop-invariant inputs are released after a cut last round")
+    assert(sc.getPersistentRDDs.keySet.diff(base) === Set(rddId(loop.frame)))
+    Lineage.releaseCut(loop.frame)
+  }
+
+  test("iterate never releases a derived (non-cut) seed or the cut it reads") {
+    import spark.implicits._
+    val cut = (1 to 100).toDF("n").cutLineage()
+    // a derived seed: walking its plan would reach `cut`, which the
+    // caller still reads after the loop
+    val seed = cut.filter($"n" % 2 === 0)
+    val loop = Lineage.iterate(seed, 3) { (df, _) => df.select(($"n" + 1).as("n")) }
+    assert(live(cut), "iterate released the cut behind a derived seed")
+    assert(cut.count() === 100)
+    assert(loop.frame.as[Int].collect().sorted === (2 to 100 by 2).map(_ + 3).toArray)
+    Lineage.releaseCut(loop.frame)
+    Lineage.releaseCut(cut)
+  }
+
+  test("iterate keeps an uncut last round's input live, and releases an unread one's") {
+    import spark.implicits._
+    val step = (df: DataFrame, _: Int) => df.select(($"n" * 2).as("n"))
+    val invariant = (1 to 3).toDF("k").cutLineage()
+    val uncut = Lineage.iterate((1 to 10).toDF("n").cutLineage(), 3,
+      last = Lineage.LastRound.Uncut, inputs = Seq(invariant))(step)
+    assert(!uncut.frame.queryExecution.analyzed.isInstanceOf[LogicalRDD],
+      "the last round must not be cut")
+    assert(live(uncut.previous), "the uncut last round's input cut was released")
+    assert(live(invariant), "an uncut last round still reads the loop inputs")
+    assert(uncut.frame.as[Int].collect().sorted === (1 to 10).map(_ * 8).toArray)
+    Lineage.releaseCut(uncut.previous)
+    Lineage.releaseCut(invariant)
+
+    val unread = Lineage.iterate((1 to 10).toDF("n").cutLineage(), 3,
+      last = Lineage.LastRound.Unread)(step)
+    assert(unread.rounds === 3)
+    assert(!live(unread.previous), "an unread last round's input cut must be released")
+  }
+
+  test("a probe-driven iterate stops at its fixpoint, or else at maxRounds") {
+    import spark.implicits._
+    def halve(maxRounds: Int) = Lineage.iterate((1 to 64).toDF("n").cutLineage(),
+      maxRounds, converged = d => d.agg(max($"n")).first().getInt(0) == 0) {
+      (df, _) => df.select(($"n" / 2).cast("int").as("n"))
+    }
+    // 64 halves to 0 in 7 rounds; the converging round counts
+    val fix = halve(20)
+    assert(fix.rounds === 7)
+    assert(fix.frame.as[Int].collect().toSet === Set(0))
+    val capped = halve(3)
+    assert(capped.rounds === 3)
+    assert(capped.frame.as[Int].collect().sorted === (1 to 64).map(_ / 8).toArray)
+    Lineage.releaseCut(fix.frame)
+    Lineage.releaseCut(capped.frame)
   }
 }
