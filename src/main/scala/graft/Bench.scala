@@ -448,9 +448,8 @@ object Bench {
       // would silently drop out of the rows/batches numerators. Size the
       // retention to the worst-case batch count (+ slack for empty/flush
       // batches) so every point stays exact regardless of env overrides.
-      spark.conf.set("spark.sql.streaming.numRecentProgressUpdates",
-        math.max(100, pages / math.max(1, perTrigger) + 16).toString)
-      try {
+      try GraftSession.withConf(spark, "spark.sql.streaming.numRecentProgressUpdates" ->
+          math.max(100, pages / math.max(1, perTrigger) + 16).toString) {
         // default ProcessingTime(0) trigger, NOT AvailableNow: the
         // source honors maxPagesPerTrigger only outside AvailableNow
         // (which by contract drains to its pinned offset in one go), and
@@ -505,9 +504,9 @@ object Bench {
     def statePoint(keys: Int, batches: Int): String = {
       val ckpt = new java.io.File(sys.props("java.io.tmpdir"),
         s"graft-bench-state-${java.util.UUID.randomUUID()}").getAbsolutePath
-      spark.conf.set("spark.sql.streaming.numRecentProgressUpdates",
-        math.max(100, batches + 16).toString)
-      try GraftSession.withConf(spark, "spark.sql.streaming.stateStore.providerClass" ->
+      try GraftSession.withConf(spark, "spark.sql.streaming.numRecentProgressUpdates" ->
+          math.max(100, batches + 16).toString)(
+        GraftSession.withConf(spark, "spark.sql.streaming.stateStore.providerClass" ->
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
         val t0 = System.nanoTime()
         val q = spark.readStream
@@ -547,7 +546,7 @@ object Bench {
         val bounded = stateRows.lastOption.exists(_ <= 4L * keys)
         val ms = progress.map(_.batchDuration.toString).mkString("[", ",", "]")
         s"""{"keys":$keys,"batches":${progress.length},"rows":$rows,"sec":$sec,"rows_per_sec":${rows / math.max(sec, 1e-9)},"provider":"rocksdb","state_rows":${stateRows.mkString("[", ",", "]")},"state_mem_bytes":${stateMem.mkString("[", ",", "]")},"state_rows_updated":${updated.mkString("[", ",", "]")},"state_rows_removed":${removed.mkString("[", ",", "]")},"bounded":$bounded,"batch_ms":$ms}"""
-      } finally {
+      }) finally {
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt)); ()
       }
     }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.queries.Catalog
+import graft.queries.{Catalog, StreamingQueries}
 
 /** Dev tool: print formatted physical plans for catalog queries (all, or
   * the names passed as args) — the working loop for SURVEY.md's
@@ -19,9 +19,7 @@ object Explain {
       // streaming replay queries: the batch explain above only shows the
       // memory-sink tail — also print the executed micro-batch plan the
       // replay recorded (state operators, partitioning, store count)
-      Seq(s"${n}_sink", n.replace("_replay", "_sink"),
-          s"${n.stripSuffix("_enrich")}_sink")
-        .flatMap(graft.streaming.StreamProbe.plan).headOption
+      StreamingQueries.sinks.get(n).flatMap(graft.streaming.StreamProbe.plan)
         .foreach { p =>
           println(s"---- executed micro-batch plan ($n) ----")
           println(p)

@@ -1,6 +1,6 @@
 package graft
 
-import graft.queries.Catalog
+import graft.queries.{Catalog, StreamingQueries}
 
 /** Dev tool: run one streaming replay catalog query and print the
   * per-micro-batch trigger-duration breakdown StreamProbe captured —
@@ -12,6 +12,8 @@ object ReplayProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val name = args(1)
+    val sink = StreamingQueries.sinks.getOrElse(name,
+      sys.error(s"$name is not a streaming replay query"))
     val cpus = args.lift(2).map(_.toInt)
       .getOrElse(Runtime.getRuntime.availableProcessors())
     val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
@@ -24,21 +26,18 @@ object ReplayProbe {
     Catalog.byName(name).build(spark, sfDir)
       .write.format("noop").mode("overwrite").save()
     println(f"==== total ${(System.nanoTime() - t0) / 1e9}%.2f s ====")
-    val sinks = Seq(s"${name}_sink", name.replace("_replay", "_sink"),
-      s"${name.stripSuffix("_enrich")}_sink")
-    sinks.flatMap(s => graft.streaming.StreamProbe.get(s).map(s -> _))
-      .headOption.foreach { case (sink, batches) =>
-        println(s"---- $sink: ${batches.length} batches ----")
-        val keys = batches.flatMap(_.durationMs.keys).distinct.sorted
-        println(("batch" +: "rows" +: keys).mkString("\t"))
-        batches.foreach { b =>
-          println((b.batchId +: b.inputRows +:
-            keys.map(k => b.durationMs.getOrElse(k, 0L))).mkString("\t"))
-        }
-        keys.foreach { k =>
-          println(f"$k%-28s sum=${batches.map(_.durationMs.getOrElse(k, 0L)).sum}%6d ms")
-        }
+    graft.streaming.StreamProbe.get(sink).foreach { batches =>
+      println(s"---- $sink: ${batches.length} batches ----")
+      val keys = batches.flatMap(_.durationMs.keys).distinct.sorted
+      println(("batch" +: "rows" +: keys).mkString("\t"))
+      batches.foreach { b =>
+        println((b.batchId +: b.inputRows +:
+          keys.map(k => b.durationMs.getOrElse(k, 0L))).mkString("\t"))
       }
+      keys.foreach { k =>
+        println(f"$k%-28s sum=${batches.map(_.durationMs.getOrElse(k, 0L)).sum}%6d ms")
+      }
+    }
     spark.stop()
   }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import graft.queries.StreamingQueries
+
 /** Stream-state boundedness audit (round-15 verdict #2): the two most
   * expensive catalog queries — the watermarked stream-stream joins
   * `j_stream_confirm_replay` and `j_stream_outer_replay` — carry the
@@ -25,9 +27,7 @@ package graft
   * SPARK_GRAFT_CPUS (default 16), SPARK_GRAFT_BENCH_OUT (artifact path).
   */
 object StreamStateAudit {
-  private val Audited = Seq(
-    "j_stream_confirm_replay" -> "j_stream_confirm_sink",
-    "j_stream_outer_replay" -> "j_stream_outer_sink")
+  private val Audited = Seq("j_stream_confirm_replay", "j_stream_outer_replay")
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -38,13 +38,14 @@ object StreamStateAudit {
     spark.sparkContext.setLogLevel("WARN")
 
     def point(dir: String, label: String): String =
-      Audited.map { case (qname, sink) =>
+      Audited.map { qname =>
         System.err.println(s"[streamstate] $label $qname")
         val t0 = System.nanoTime()
         SparkEntry.queries(qname)(spark, dir)
           .write.format("noop").mode("overwrite").save()
         val sec = (System.nanoTime() - t0) / 1e9
-        val trace = graft.streaming.StreamProbe.get(sink).getOrElse(Seq.empty)
+        val trace = graft.streaming.StreamProbe.get(StreamingQueries.sinks(qname))
+          .getOrElse(Seq.empty)
         val batches = trace.map(b =>
           s"""{"batch":${b.batchId},"input":${b.inputRows},"state_rows":${b.stateRows},"state_mem_bytes":${b.stateMemBytes},"updated":${b.rowsUpdated},"removed":${b.rowsRemoved}}""")
           .mkString("[", ",", "]")

@@ -7,19 +7,24 @@ object Verify {
   /** Dump each selected query's result parquet + the oracle-SQL json into
     * `outDir` — the shared engine behind Verify (driver gate, full
     * catalog at the driver's SF) and ScaleVerify (headline queries
-    * against an N× key-shifted replica). */
+    * against an N× key-shifted replica). Each selected query's old output
+    * is deleted first, so a query that throws leaves NO result dir (a
+    * stale one from an earlier run would still compare green), and the
+    * json names exactly the selected queries — tools/check.py fails every
+    * entry without a result dir. */
   def dump(spark: SparkSession, sfDir: String, outDir: String,
            only: Option[Set[String]]): Unit = {
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) }
-      .foreach { case (name, fn) =>
+    val selected = SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) }
+    selected.foreach { case (name, fn) =>
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"$outDir/$name"))
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    writeOracleJson(outDir)
+    writeOracleJson(outDir, selected.keySet)
   }
 
   def main(args: Array[String]): Unit = {
@@ -34,7 +39,7 @@ object Verify {
     spark.stop()
   }
 
-  private def writeOracleJson(outDir: String): Unit = {
+  private def writeOracleJson(outDir: String, names: Set[String]): Unit = {
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -47,7 +52,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.filter { case (k, _) => names(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     ()

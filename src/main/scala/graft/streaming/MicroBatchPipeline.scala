@@ -80,6 +80,39 @@ object MicroBatchPipeline {
                          end: java.sql.Timestamp, nEvents: Long, totalValue: Double)
   case class SessionAcc(startMs: Long, endMs: Long, n: Long, sum: Double)
 
+  private def toSession(userId: Long, acc: SessionAcc) = UserSession(userId,
+    new java.sql.Timestamp(acc.startMs), new java.sql.Timestamp(acc.endMs),
+    acc.n, acc.sum)
+
+  /** The gap-merge fold both sessionizers share: one key's micro-batch
+    * `rows`, in event-time order, extend the `open` session while the gap
+    * to its end is at most `gapMs`; a larger gap closes it. Returns the
+    * sessions closed in this batch and the session left open. */
+  private def mergeGaps(userId: Long, rows: Iterator[SessionEvent],
+                        open: Option[SessionAcc], gapMs: Long)
+      : (Seq[UserSession], Option[SessionAcc]) = {
+    var acc = open.orNull
+    val closed = Seq.newBuilder[UserSession]
+    rows.toSeq.sortBy(_.ts.getTime).foreach { e =>
+      val t = e.ts.getTime
+      if (acc == null) acc = SessionAcc(t, t, 1, e.value)
+      else if (t - acc.endMs <= gapMs)
+        // min/max, not assignment: an out-of-order event delivered in a
+        // LATER micro-batch (but inside the watermark) must never regress
+        // the session bounds — output would then depend on micro-batch
+        // boundaries.
+        acc = acc.copy(
+          startMs = math.min(acc.startMs, t),
+          endMs = math.max(acc.endMs, t),
+          n = acc.n + 1, sum = acc.sum + e.value)
+      else {
+        closed += toSession(userId, acc)
+        acc = SessionAcc(t, t, 1, e.value)
+      }
+    }
+    (closed.result(), Option(acc))
+  }
+
   /** Gap-based sessionization via flatMapGroupsWithState: events closer
     * than `gap` in event time merge into one session; a larger gap closes
     * the session and emits it, the open session stays in state across
@@ -98,34 +131,13 @@ object MicroBatchPipeline {
       .flatMapGroupsWithState[SessionAcc, UserSession](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (userId, rows, state: GroupState[SessionAcc]) =>
-          val sorted = rows.toSeq.sortBy(_.ts.getTime)
-          var acc = state.getOption.orNull
-          val closed = Seq.newBuilder[UserSession]
-          sorted.foreach { e =>
-            val t = e.ts.getTime
-            if (acc == null) acc = SessionAcc(t, t, 1, e.value)
-            else if (t - acc.endMs <= gap.toMillis)
-              // min/max, not assignment: an out-of-order event delivered in
-              // a LATER micro-batch (but inside the watermark) must never
-              // regress the session bounds — output would then depend on
-              // micro-batch boundaries.
-              acc = acc.copy(
-                startMs = math.min(acc.startMs, t),
-                endMs = math.max(acc.endMs, t),
-                n = acc.n + 1, sum = acc.sum + e.value)
-            else {
-              closed += UserSession(userId,
-                new java.sql.Timestamp(acc.startMs), new java.sql.Timestamp(acc.endMs),
-                acc.n, acc.sum)
-              acc = SessionAcc(t, t, 1, e.value)
-            }
-          }
-          if (acc != null) state.update(acc)
-          closed.result().iterator
+          val (closed, open) = mergeGaps(userId, rows, state.getOption, gap.toMillis)
+          open.foreach(state.update)
+          closed.iterator
       }
   }
 
-  /** Sessionization with idle expiry: same gap-merge logic as
+  /** Sessionization with idle expiry: the same gap-merge fold as
     * [[sessionize]], plus `GroupStateTimeout.EventTimeTimeout` so a
     * session whose user goes quiet is CLOSED once the event-time
     * watermark passes (last event + gap) — without it, the final session
@@ -141,9 +153,6 @@ object MicroBatchPipeline {
       : org.apache.spark.sql.Dataset[UserSession] = {
     import events.sparkSession.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    def emit(userId: Long, acc: SessionAcc) = UserSession(userId,
-      new java.sql.Timestamp(acc.startMs), new java.sql.Timestamp(acc.endMs),
-      acc.n, acc.sum)
     events
       .withWatermark("ts", lateness)
       .groupByKey(_.userId)
@@ -155,26 +164,10 @@ object MicroBatchPipeline {
             // this session any more — close, emit, evict.
             val acc = state.get
             state.remove()
-            Iterator.single(emit(userId, acc))
+            Iterator.single(toSession(userId, acc))
           } else {
-            val sorted = rows.toSeq.sortBy(_.ts.getTime)
-            var acc = state.getOption.orNull
-            val closed = Seq.newBuilder[UserSession]
-            sorted.foreach { e =>
-              val t = e.ts.getTime
-              if (acc == null) acc = SessionAcc(t, t, 1, e.value)
-              else if (t - acc.endMs <= gap.toMillis)
-                // see sessionize: never regress bounds on late arrivals
-                acc = acc.copy(
-                  startMs = math.min(acc.startMs, t),
-                  endMs = math.max(acc.endMs, t),
-                  n = acc.n + 1, sum = acc.sum + e.value)
-              else {
-                closed += emit(userId, acc)
-                acc = SessionAcc(t, t, 1, e.value)
-              }
-            }
-            if (acc != null) {
+            val (closed, open) = mergeGaps(userId, rows, state.getOption, gap.toMillis)
+            open.foreach { acc =>
               state.update(acc)
               // close when the watermark proves no extension can arrive;
               // clamp to the watermark so a session already older than
@@ -184,7 +177,7 @@ object MicroBatchPipeline {
                 math.max(acc.endMs + gap.toMillis,
                   state.getCurrentWatermarkMs() + 1))
             }
-            closed.result().iterator
+            closed.iterator
           }
       }
   }

@@ -27,7 +27,8 @@ import graft.streaming.StreamProbe
   */
 class StreamStateSpec extends SparkSpec {
 
-  private def trace(qname: String, sink: String): Seq[StreamProbe.BatchState] = {
+  private def trace(qname: String): Seq[StreamProbe.BatchState] = {
+    val sink = StreamingQueries.sinks(qname)
     Catalog.byName(qname).build(spark, sfSmoke)
       .write.format("noop").mode("overwrite").save()
     StreamProbe.get(sink)
@@ -64,16 +65,40 @@ class StreamStateSpec extends SparkSpec {
 
   test("j_stream_confirm_replay: inner join state plateaus under the watermark") {
     assertWatermarkBounded("j_stream_confirm_replay",
-      trace("j_stream_confirm_replay", "j_stream_confirm_sink"))
+      trace("j_stream_confirm_replay"))
   }
 
   test("j_stream_outer_replay: outer join state plateaus and still emits null-extended rows") {
-    val t = trace("j_stream_outer_replay", "j_stream_outer_sink")
+    val t = trace("j_stream_outer_replay")
     assertWatermarkBounded("j_stream_outer_replay", t)
     // outer-specific: the final state is exactly the purchases whose
     // match window the global watermark never passed — nonzero here
     // (the 29-day feed always leaves a <2-day tail in flight)
     assert(t.last.stateRows > 0,
       "outer replay should end with the un-closable tail still in state")
+  }
+
+  test("every replay records its trace and plan under its mapped sink and leaves no temp dir") {
+    val replays = StreamingQueries.qs.map(_.name)
+    assert(StreamingQueries.sinks.keySet == replays.toSet,
+      "the sink map must name exactly the streaming replay queries")
+    val tmpRoot = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def runnerDirs(): Set[String] =
+      Option(tmpRoot.list()).getOrElse(Array.empty[String])
+        .filter(_.startsWith(StreamingQueries.TmpPrefix)).toSet
+    val before = runnerDirs()
+    replays.foreach { qname =>
+      val sink = StreamingQueries.sinks(qname)
+      val prior = StreamProbe.get(sink)
+      Catalog.byName(qname).build(spark, sfSmoke)
+        .write.format("noop").mode("overwrite").save()
+      val recorded = StreamProbe.get(sink)
+        .getOrElse(fail(s"$qname: no trace recorded under $sink"))
+      // a fresh record from THIS build, not a leftover from an earlier suite
+      assert(prior.forall(_ ne recorded), s"$qname: trace under $sink was not rewritten")
+      assert(recorded.nonEmpty, s"$qname: empty trace under $sink")
+      assert(StreamProbe.plan(sink).exists(_.nonEmpty), s"$qname: no plan recorded under $sink")
+      assert(runnerDirs() == before, s"$qname: replay temp dir left behind: ${runnerDirs() -- before}")
+    }
   }
 }

@@ -9,7 +9,10 @@ Assumes Verify has already been run:
 For each query result parquet in outDir, runs the matching oracle SQL from
 oracle_sql.json in DuckDB over the same sfDir tables and compares:
 schema (sorted column names), row count, and values (exact; doubles exact
-too — the engine computes in decimal specifically so this holds).
+too — the engine computes in decimal specifically so this holds). An
+oracle entry with no result dir (the query threw in Verify) is a FAIL
+(`missing`), so the exit code is 1 whenever a checked query produced no
+output.
 """
 import duckdb, glob, json, math, os, sys
 
@@ -61,10 +64,16 @@ def main():
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracle = json.load(open(os.path.join(outdir, "oracle_sql.json")))
     n_pass = n_fail = n_noracle = 0
-    for d in sorted(glob.glob(os.path.join(outdir, "*"))):
-        if not os.path.isdir(d):
+    dirs = {os.path.basename(d): d
+            for d in glob.glob(os.path.join(outdir, "*")) if os.path.isdir(d)}
+    for name in sorted(set(dirs) | set(oracle)):
+        d = dirs.get(name)
+        if d is None:
+            print(f"  FAIL {name}: missing (no result dir — the query threw "
+                  f"in Verify; see its [verify] stderr line)")
+            record(name, "fail", detail="missing")
+            n_fail += 1
             continue
-        name = os.path.basename(d)
         spark_rel = con.sql(f"SELECT * FROM read_parquet('{d}/*.parquet')")
         if name not in oracle:
             nrows = len(spark_rel.fetchall())
